@@ -290,14 +290,16 @@ def _poly_gen_stats(pdf: pd.DataFrame) -> dict:
     """Generation-time planner stats for a generated polygon layer (r8,
     the ingest-time-stats idea of plans/stats.py applied to the in-memory
     datagen path): computed driver-side from the pandas frame the layer is
-    built from — ZERO Spark probe jobs when pip_join later plans a join
-    against this layer. `all_rect` replicates planner.all_rectangles
-    (closed 5-point ring, axis-parallel edges, vertices on the bbox);
-    `bboxes` lets pip_join count exploded cover cells for ITS resolution
-    with pure arithmetic."""
+    built from — the planner.layer_stats table with ZERO Spark jobs when
+    pip_join later plans a join against this layer. `all_rect` replicates
+    planner._is_rect (closed 5-point ring, axis-parallel edges, vertices
+    on the bbox, at most one ring)."""
+    from .plans import planner
+
     all_rect = True
-    for xs, ys, mnx, mny, mxx, mxy in zip(pdf["xs"], pdf["ys"], pdf["minx"],
-                                          pdf["miny"], pdf["maxx"], pdf["maxy"]):
+    lens = pdf["ring_lens"] if "ring_lens" in pdf else [None] * len(pdf)
+    for xs, ys, mnx, mny, mxx, mxy, rl in zip(pdf["xs"], pdf["ys"], pdf["minx"],
+                                              pdf["miny"], pdf["maxx"], pdf["maxy"], lens):
         if len(xs) != 5 or xs[0] != xs[4] or ys[0] != ys[4]:
             all_rect = False
             break
@@ -307,20 +309,18 @@ def _poly_gen_stats(pdf: pd.DataFrame) -> dict:
         if not all((xs[i] == xs[i + 1]) != (ys[i] == ys[i + 1]) for i in range(4)):
             all_rect = False
             break
-    return {
-        "all_rect": all_rect,
-        "bboxes": [(float(a), float(b), float(c), float(d))
-                   for a, b, c, d in zip(pdf["minx"], pdf["miny"],
-                                         pdf["maxx"], pdf["maxy"])],
-    }
+        if rl is not None and len(rl) > 1:
+            all_rect = False
+            break
+    return planner.stats_from_bboxes(pdf["minx"], pdf["miny"], pdf["maxx"], pdf["maxy"], all_rect)
 
 
 def polygons_df(spark: SparkSession, nx: int = 10, ny: int = 5) -> DataFrame:
     pdf = make_polygons(nx, ny)
     df = spark.createDataFrame(pdf, POLY_SCHEMA)
     # generation-time stats ride the DataFrame object so pip_join's
-    # planner decisions (exact refine, broadcast, cover cardinality) are
-    # driver-side lookups instead of probe jobs (~0.3 s/pipeline run)
+    # planner decisions (cover levels, broadcast, exact refine) are
+    # lookups instead of an aggregate job (~0.3 s/pipeline run)
     df._egs_poly_stats = _poly_gen_stats(pdf)
     return df
 

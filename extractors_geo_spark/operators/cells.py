@@ -34,16 +34,24 @@ def _grid_n(res: int) -> int:
 
 
 # ---------------------------------------------------------------- Catalyst
-def cell_ix(lon: Column, res: int) -> Column:
-    n = _grid_n(res)
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1)).cast("long")
+def _n_col(res: int | Column) -> Column:
+    """Grid side 2^res: a literal for a fixed level, an expression for a
+    per-row level column."""
+    if isinstance(res, Column):
+        return F.pow(F.lit(2.0), res).cast("long")  # exact for res <= 29
+    return F.lit(_grid_n(res))
 
 
-def cell_iy(lat: Column, res: int) -> Column:
-    n = _grid_n(res)
-    raw = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(n))
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1)).cast("long")
+def cell_ix(lon: Column, res: int | Column) -> Column:
+    n = _n_col(res)
+    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n)
+    return F.least(F.greatest(raw, F.lit(0)), n - 1).cast("long")
+
+
+def cell_iy(lat: Column, res: int | Column) -> Column:
+    n = _n_col(res)
+    raw = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * n)
+    return F.least(F.greatest(raw, F.lit(0)), n - 1).cast("long")
 
 
 def cell_id(lon: Column, lat: Column, res: int) -> Column:
@@ -63,34 +71,79 @@ def cell_id_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     return f"(CAST({res} AS BIGINT) * {RES_SHIFT} + {iy} * {Y_SHIFT} + {ix})"
 
 
-def cover_bbox(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int) -> Column:
+def _cover_axes(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int | Column):
+    """(n, x0, nx, y0, y1) of a bbox cover: first column and column count
+    (wrapping), first and last row."""
+    n = _n_col(res)
+    x0, x1 = cell_ix(minx, res), cell_ix(maxx, res)
+    # lat decreases as iy increases -> maxy gives the smaller iy
+    y0, y1 = cell_iy(maxy, res), cell_iy(miny, res)
+    nx = F.when(x0 <= x1, x1 - x0 + 1).otherwise(n - x0 + x1 + 1).cast("long")
+    return n, x0, nx, y0, y1
+
+
+def cover_bbox(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int | Column) -> Column:
     """All cells intersecting a bbox, as an array column (explode to join).
-    Pure Catalyst: two sequences + a cartesian flatten. Cardinality is
-    bounded by the caller's choice of res (adaptive splitting handles the
-    hot ones).
+    Pure Catalyst: two sequences + a cartesian flatten. ``res`` is a fixed
+    level or a per-row level column (the size-adaptive cover of
+    operators.pip_join).
 
     Antimeridian: a box given as minx > maxx is treated as wrapping across
     the ±180 meridian and splits into two x-ranges ([x0, n-1] and [0, x1])
     instead of silently stepping a negative sequence."""
-    n = _grid_n(res)
-    x0, x1 = cell_ix(minx, res), cell_ix(maxx, res)
-    # lat decreases as iy increases -> maxy gives the smaller iy
-    y0, y1 = cell_iy(maxy, res), cell_iy(miny, res)
+    n, x0, nx, y0, y1 = _cover_axes(minx, miny, maxx, maxy, res)
     # wrap via a MODULAR index sequence, never a when()-guarded array: a
     # conditional array as a higher-order-function input drops the whole
     # expression out of codegen (measured 12x on the ngram index)
-    nx = F.when(x0 <= x1, x1 - x0 + 1).otherwise(F.lit(n) - x0 + x1 + 1).cast("long")
     xs = F.transform(
         F.sequence(F.lit(0).cast("long"), nx - 1),
-        lambda i: F.pmod(x0 + i, F.lit(n).cast("long")),
+        lambda i: F.pmod(x0 + i, n.cast("long")),
     )
-    base = F.lit(res).cast("long") * F.lit(RES_SHIFT)
+    base = (res if isinstance(res, Column) else F.lit(res)).cast("long") * F.lit(RES_SHIFT)
     return F.flatten(
         F.transform(
             F.sequence(y0, y1),
             lambda iy: F.transform(xs, lambda ix: base + iy * F.lit(Y_SHIFT) + ix),
         )
     )
+
+
+def cover_count(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int | Column) -> Column:
+    """size(cover_bbox(...)) without building the array. A descending row
+    range counts like sequence() steps it: |y1 - y0| + 1 rows."""
+    _, _, nx, y0, y1 = _cover_axes(minx, miny, maxx, maxy, res)
+    return nx * (F.abs(y1 - y0) + 1)
+
+
+# A span narrower than FIT_CELLS cells of a level crosses at most
+# FIT_CELLS + 1 of them: floor(b * n) - floor(a * n) <= floor((b - a) * n) + 1.
+FIT_CELLS = 3
+
+
+def _axis_level(span: Column, extent: float) -> Column:
+    """Largest k <= MAX_RES with span * 2^k < FIT_CELLS * extent, in closed
+    form: log2 gives k to within one, and two exact power-of-two products
+    settle it, so the numpy twin (_axis_level_np) agrees bit for bit.
+    A zero span fits every level; the log is never taken of it, so no
+    ANSI error can arise."""
+    lim = float(FIT_CELLS * extent)
+    k = F.least(F.greatest(F.floor(F.log2(F.lit(lim)) - F.log2(span)), F.lit(-1)),
+                F.lit(MAX_RES + 1))
+    two = F.lit(2.0)
+    k = (k - (span * F.pow(two, k) >= F.lit(lim)).cast("long")
+         + (span * F.pow(two, k + 1) < F.lit(lim)).cast("long"))
+    return F.when(span > 0, F.least(k, F.lit(MAX_RES))).otherwise(F.lit(MAX_RES))
+
+
+def fit_level(minx: Column, miny: Column, maxx: Column, maxy: Column) -> Column:
+    """The bbox's fit level: the finest level <= MAX_RES at which it is
+    narrower than FIT_CELLS cells on both axes, so its cover_bbox is at
+    most 4 x 4 cells. A box with minx > maxx wraps the antimeridian and
+    is maxx - minx + 360 wide. Int column; fit_level_np is the numpy twin."""
+    w = F.when(maxx >= minx, maxx - minx).otherwise(maxx - minx + F.lit(360.0))
+    h = F.abs(maxy - miny)
+    lvl = F.least(_axis_level(w, 360.0), _axis_level(h, 180.0))
+    return F.greatest(lvl, F.lit(0)).cast("int")
 
 
 def cell_children(cell: Column) -> Column:
@@ -130,11 +183,43 @@ def cell_ring(cell: Column, k: int = 1) -> Column:
 
 
 # ------------------------------------------------------------------- numpy
+def _ix_np(lon, n: int):
+    return np.clip(np.floor((np.asarray(lon, np.float64) + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+
+
+def _iy_np(lat, n: int):
+    return np.clip(np.floor((90.0 - np.asarray(lat, np.float64)) / 180.0 * n), 0, n - 1).astype(np.int64)
+
+
 def cell_np(lon, lat, res: int):
     n = _grid_n(res)
-    ix = np.clip(np.floor((np.asarray(lon, np.float64) + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-    iy = np.clip(np.floor((90.0 - np.asarray(lat, np.float64)) / 180.0 * n), 0, n - 1).astype(np.int64)
-    return res * RES_SHIFT + iy * Y_SHIFT + ix
+    return res * RES_SHIFT + _iy_np(lat, n) * Y_SHIFT + _ix_np(lon, n)
+
+
+def cover_count_np(minx, miny, maxx, maxy, res: int):
+    """Numpy twin of cover_count: cover_bbox sizes, antimeridian wrap
+    included."""
+    n = _grid_n(res)
+    x0, x1 = _ix_np(minx, n), _ix_np(maxx, n)
+    y0, y1 = _iy_np(maxy, n), _iy_np(miny, n)
+    nx = np.where(x0 <= x1, x1 - x0 + 1, n - x0 + x1 + 1)
+    return nx * (np.abs(y1 - y0) + 1)
+
+
+def _axis_level_np(span, extent: float):
+    lim = float(FIT_CELLS * extent)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        k = np.clip(np.floor(np.log2(lim) - np.log2(span)), -1, MAX_RES + 1).astype(np.int64)
+    k = k - (np.ldexp(span, k) >= lim) + (np.ldexp(span, k + 1) < lim)
+    return np.where(span > 0, np.minimum(k, MAX_RES), MAX_RES)
+
+
+def fit_level_np(minx, miny, maxx, maxy):
+    """Numpy twin of fit_level (same closed form, same int results)."""
+    minx, miny, maxx, maxy = (np.asarray(v, np.float64) for v in (minx, miny, maxx, maxy))
+    w = np.where(maxx >= minx, maxx - minx, maxx - minx + 360.0)
+    lvl = np.minimum(_axis_level_np(w, 360.0), _axis_level_np(np.abs(maxy - miny), 180.0))
+    return np.maximum(lvl, 0)
 
 
 def cell_decode_np(cell):

@@ -4,17 +4,28 @@ Replaces the containment semantics the reference delegates to GeoServer's
 WMS bbox rendering (preview.geotiff/gsclient.py:75-76) and pycsw's bbox
 records (pycsw.extractor/pycswutils.py:89-109) with a native two-phase plan:
 
-  coarse:  polygons explode to their covering geocell set;
-           points encode to their containing cell;
+  coarse:  each polygon explodes to the cells covering its bbox at its
+           own level; each point encodes to its cell at every level the
+           layer uses;
            equi-join on `cell` (hash-partitionable, AQE-skew-splittable)
-  refine:  exact even-odd ray cast, vectorized over the Arrow batch
-           (flat-edge-array trick: all candidate pairs' edges in one numpy
-           kernel — no per-row Python)
+  refine:  bbox test, then exact even-odd ray cast, vectorized over the
+           Arrow batch (flat-edge-array trick: all candidate pairs' edges
+           in one numpy kernel — no per-row Python)
 
-Physical strategy is chosen by plans.planner.choose_pip_strategy:
-  * broadcast  — polygon side small (the common dims-vs-facts shape; the
-    states layer is 49 rows): exploded polygon-cells are broadcast, the
-    point side never shuffles AT ALL.
+Size-adaptive cover: a polygon covers at the finest level <= `res` at which
+its bbox spans at most 4 cells per axis (cells.fit_level), snapped to the
+level set plans.planner.cover_plan chose. Every cover level is a level the
+point side is tagged at, so each (point, polygon) pair meets in exactly
+one cell; any level set gives the same pairs, the set only sets the cost.
+A layer of 0.5-degree tracts joined at res 13 covers ~37k cells this way
+instead of ~2.2M. The level set is [res] — the classic single-level
+cover, points tagged once — when the caller forces the join strategy or
+passes `poly_cells_hint`.
+
+Physical strategy (plans.planner.should_broadcast on the cover-row count):
+  * broadcast  — polygon cover small (the common dims-vs-facts shape; the
+    states layer is 49 rows): the cover rows are broadcast, the point side
+    never shuffles AT ALL.
   * partitioned — both sides large: shuffle on `cell`; hot metro cells are
     handled by AQE skew-join plus optional salting (points add a salt from
     phash, polygon cells duplicate per salt).
@@ -40,38 +51,51 @@ DEFAULT_RES = 6  # 64x64 world grid ≈ 0.9 deg cells at CONUS; tune per layer
 from ..exprcache import memo_col as _memo_col
 
 
+_BOX = ("minx", "miny", "maxx", "maxy")
+
+
+def _cover_level(levels: tuple[int, ...]):
+    """Each polygon's cover level: its fit level snapped down to the
+    nearest level in `levels` (the coarsest when it fits none), so the
+    polygon covers at a level the point side is tagged at even where the
+    planner's level set disagrees with cells.fit_level."""
+    def build():
+        fit = cells.fit_level(*[F.col(c) for c in _BOX])
+        lvl = F.when(fit >= levels[-1], F.lit(levels[-1]))
+        for lv in reversed(levels[1:-1]):
+            lvl = lvl.when(fit >= lv, F.lit(lv))
+        return lvl.otherwise(F.lit(levels[0]))
+
+    return _memo_col(("cover_level", levels), build)
+
+
+def _cover_cells(levels: tuple[int, ...]):
+    """Exploded cover cells of each polygon row: at the one level, or at
+    the per-row `_lvl` column (_cover_level) when there are several."""
+    lvl = levels[0] if len(levels) == 1 else F.col("_lvl")
+    return _memo_col(("poly_cells", levels),
+                     lambda: F.explode(cells.cover_bbox(*[F.col(c) for c in _BOX], lvl)))
+
+
+def _point_cells(lon: str, lat: str, levels: tuple[int, ...]):
+    """A point's cell at each level: a scalar for one level, else exploded
+    to one row per level."""
+    def build():
+        if len(levels) == 1:
+            return cells.cell_id(F.col(lon), F.col(lat), levels[0])
+        return F.explode(F.array(*[cells.cell_id(F.col(lon), F.col(lat), lv) for lv in levels]))
+
+    return _memo_col(("point_cells", lon, lat, levels), build)
+
+
 def polygon_cells(polygons: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    """Explode each polygon to its covering cells (bbox cover — false
-    positives removed by the exact refine)."""
-    cell = _memo_col(
-        ("poly_cells", res),
-        lambda: F.explode(
-            cells.cover_bbox(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res)
-        ),
-    )
-    return polygons.withColumn("cell", cell)
+    """Explode each polygon to its covering cells at `res` (bbox cover —
+    false positives removed by the exact refine)."""
+    return polygons.withColumn("cell", _cover_cells((res,)))
 
 
 def tag_point_cells(points: DataFrame, lon: str = "lon", lat: str = "lat", res: int = DEFAULT_RES) -> DataFrame:
-    cell = _memo_col(("point_cell", lon, lat, res),
-                     lambda: cells.cell_id(F.col(lon), F.col(lat), res))
-    return points.withColumn("cell", cell)
-
-
-def _cover_cells_n(minx: float, miny: float, maxx: float, maxy: float, res: int) -> int:
-    """Exact cardinality of cells.cover_bbox for a non-wrapping bbox —
-    the same clamped floor arithmetic, evaluated driver-side."""
-    n = 1 << res
-
-    def _ix(lon):
-        return min(max(int(np.floor((lon + 180.0) / 360.0 * n)), 0), n - 1)
-
-    def _iy(lat):
-        return min(max(int(np.floor((90.0 - lat) / 180.0 * n)), 0), n - 1)
-
-    nx = _ix(maxx) - _ix(minx) + 1
-    ny = _iy(miny) - _iy(maxy) + 1
-    return nx * ny
+    return points.withColumn("cell", _point_cells(lon, lat, (res,)))
 
 
 def _raycast_refine(joined: DataFrame, lon: str, lat: str) -> DataFrame:
@@ -141,63 +165,56 @@ def pip_join(
 ) -> DataFrame:
     """Return one row per (point, containing polygon).
 
-    broadcast_polys=None lets the planner decide from the polygon count.
+    The planner reads one layer-stats table (plans.planner.layer_stats:
+    polygons per fit level, their cover rows, all_rect) and derives every
+    decision from it for THIS `res`: the cover level set, the broadcast
+    decision from the exact cover-row count, and the refine. The table
+    comes from `poly_stats` (plans.stats.stored_poly_stats), else from
+    generation-time stats riding the DataFrame (datagen.polygons_df) — zero
+    jobs either way — else from one aggregate over the polygon rows.
+
+    broadcast_polys=None lets the planner decide; True/False forces it.
     exact='auto' (default) drops the ray-cast python stage when the layer
     is all axis-aligned rectangles (bbox refine is then already exact) —
     a plan rewrite, not an approximation. Pass True/False to force.
     `salt` (partitioned path only) spreads each hot cell over `salt`
     shuffle keys; the polygon side is duplicated per salt value, the point
     side picks pmod(phash-or-hash, salt). `poly_cells_hint` (expected
-    exploded polygon-cell rows) skips the broadcast-probe job entirely.
+    polygon-cell rows at `res`) decides broadcast without stats. Forcing
+    broadcast_polys or passing the hint covers every polygon at `res`;
+    with exact forced too, the plan builds with zero jobs.
 
-    `cell_stats` / `poly_stats` (r7): ingest-time stats from
-    plans.stats.stored_cell_stats / stored_poly_stats. With both
-    provided, EVERY planner decision (exact, broadcast, salt) is a
-    driver-side lookup — the plan builds with zero probe jobs; the
-    probes remain the fallback for stat-less inputs."""
+    `cell_stats` (plans.stats.stored_cell_stats) supplies the hottest-cell
+    bound that sets the salt factor on the partitioned path."""
     from ..plans import planner
 
-    if poly_stats is not None:
-        if exact == "auto":
-            exact = not poly_stats["all_rect"]
-        if poly_cells_hint is None:
-            poly_cells_hint = poly_stats["poly_cells"]
-    # generation-time stats riding the DataFrame (datagen.polygons_df, r8):
-    # same contract as poly_stats, but the cover cardinality is counted
-    # here for THIS res from the stored bboxes — pure driver arithmetic,
-    # zero probe jobs (measured ~0.3 s/plan on the flagship pipeline)
-    gen_stats = getattr(polygons, "_egs_poly_stats", None)
-    if gen_stats is not None:
-        if exact == "auto":
-            exact = not gen_stats["all_rect"]
-        if poly_cells_hint is None:
-            poly_cells_hint = sum(
-                _cover_cells_n(mnx, mny, mxx, mxy, res)
-                for mnx, mny, mxx, mxy in gen_stats["bboxes"]
-            )
+    single = broadcast_polys is not None or poly_cells_hint is not None
+    stats = poly_stats
+    if stats is None and (not single or exact == "auto"):
+        stats = planner.layer_stats(polygons)
     if exact == "auto":
-        exact = not planner.all_rectangles(polygons)
+        exact = not stats["all_rect"]
+    if single:
+        levels = (res,)
+        if broadcast_polys is None:
+            broadcast_polys = planner.should_broadcast(poly_cells_hint)
+    else:
+        levels, n_cells = planner.cover_plan(stats, res)
+        broadcast_polys = planner.should_broadcast(n_cells)
     # single select per side (r8): select-then-withColumn costs one extra
     # eagerly-analyzed Dataset op per side — fused into one projection
     # (~0.05 s/plan build; the flagship times plan construction)
-    cell_col = _memo_col(("point_cell", lon, lat, res),
-                         lambda: cells.cell_id(F.col(lon), F.col(lat), res))
-    pts = points.select(*point_cols, lon, lat, cell_col.alias("cell"))
-    geom_cols = ["xs", "ys", "minx", "miny", "maxx", "maxy"]
+    pts = points.select(*point_cols, lon, lat, _point_cells(lon, lat, levels).alias("cell"))
+    geom_cols = ["xs", "ys", *_BOX]
     if "ring_lens" in polygons.columns:
         geom_cols.append("ring_lens")
-    pcs_cell = _memo_col(
-        ("poly_cells", res),
-        lambda: F.explode(
-            cells.cover_bbox(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res)
-        ),
-    )
-    pcs = polygons.select(*poly_cols, *geom_cols, pcs_cell.alias("cell"))
+    pcs = polygons
+    if len(levels) > 1:
+        # its own projection: cover_bbox reads the level ~20 times, and
+        # Catalyst keeps a non-trivial column used that often computed once
+        pcs = pcs.select(*poly_cols, *geom_cols, _cover_level(levels).alias("_lvl"))
+    pcs = pcs.select(*poly_cols, *geom_cols, _cover_cells(levels).alias("cell"))
 
-    if broadcast_polys is None:
-        # poly_cells_hint (expected EXPLODED polygon-cell row count) makes
-        # the decision free; otherwise a bounded count probes it
-        broadcast_polys = planner.should_broadcast(pcs, size_hint=poly_cells_hint)
     if (salt is None and not broadcast_polys and cell_stats is not None
             and cell_stats.get("max_cell_n")):
         # stored hottest-cell bound -> salt factor with no probe job

@@ -7,15 +7,16 @@ when the caller had no hint. These helpers compute the needed numbers
 ONCE at ingest — riding the same aggregation pass the data makes anyway
 — store them in the SnapshotTable commit summary, and read them back as
 a driver-side metadata lookup (zero Spark jobs). pip_join consumes them
-via `cell_stats=` / `poly_stats=`; the probe remains only the fallback
-for stat-less inputs.
+via `cell_stats=` / `poly_stats=`; without polygon stats it runs one
+planner aggregate instead. The polygon stats are planner.layer_stats'
+per-fit-level table, which serves a join at any resolution.
 
 Staleness across commits is handled CONSERVATIVELY: the reader combines
 every commit since the last full rewrite — per-cell maxima ADD (a cell
-can accumulate rows across appends), rectangle-ness ANDs, exploded cell
-counts add. Over-estimating the hot-cell count only over-salts (more,
-smaller tasks); it can never under-partition, so the bound is safe at
-any scale.
+can accumulate rows across appends), rectangle-ness ANDs, per-level
+polygon and cover counts add. Over-estimating the hot-cell count only
+over-salts (more, smaller tasks); it can never under-partition, so the
+bound is safe at any scale.
 
 Reference analog: none (the reference delegates planning to
 GeoServer/PostGIS); Spark-first surface per SURVEY §4.2.
@@ -46,18 +47,14 @@ def compute_cell_stats(points: DataFrame, lon: str = "lon",
 
 
 def compute_poly_stats(polygons: DataFrame, res: int = 7) -> dict:
-    """Polygon-side planner stats: {'res', 'poly_cells' (exploded
-    cover rows at res — the broadcast-decision number), 'all_rect'
-    (True -> the bbox refine is exact and the ray-cast stage drops)}."""
-    from ..operators.pip_join import polygon_cells
+    """Polygon-side planner stats: the res-independent planner.layer_stats
+    table ('by_level', 'rows', 'all_rect'), plus the keys of the older
+    single-res format: 'res' and 'poly_cells' (cover rows of a pip_join
+    at `res`)."""
     from . import planner
 
-    geom = ["xs", "ys", "minx", "miny", "maxx", "maxy"]
-    if "ring_lens" in polygons.columns:
-        geom.append("ring_lens")
-    n = polygon_cells(polygons.select(*geom), res).count()
-    return {"res": res, "poly_cells": int(n),
-            "all_rect": planner.all_rectangles(polygons)}
+    st = planner.layer_stats(polygons)
+    return {**st, "res": res, "poly_cells": planner.cover_plan(st, res)[1]}
 
 
 def ingest_with_stats(table, df: DataFrame, kind: str = "points",
@@ -113,6 +110,12 @@ def stored_cell_stats(table) -> dict | None:
 
 
 def stored_poly_stats(table) -> dict | None:
+    """Combined polygon-side stats for the CURRENT table state: per-level
+    counts add across appends, rectangle-ness ANDs. None when a commit
+    since the last full rewrite has no stats or only the older single-res
+    format (pip_join then runs its one planner aggregate)."""
+    from . import planner
+
     merged = None
     for snap in _commits_since_rewrite(table):
         st = snap.get("summary", {}).get(POLY_STATS_KEY)
@@ -121,13 +124,17 @@ def stored_poly_stats(table) -> dict | None:
                                      "rollback"):
                 return None
             continue
+        if "by_level" not in st:
+            return None
         if merged is None:
             merged = dict(st)
         else:
-            if st["res"] != merged["res"]:
-                return None
-            merged["poly_cells"] += st["poly_cells"]
+            merged["by_level"] = [[x + y for x, y in zip(old, new)]
+                                  for old, new in zip(merged["by_level"], st["by_level"])]
+            merged["rows"] += st["rows"]
             merged["all_rect"] = merged["all_rect"] and st["all_rect"]
+    if merged is not None:
+        merged["poly_cells"] = planner.cover_plan(merged, merged["res"])[1]
     return merged
 
 

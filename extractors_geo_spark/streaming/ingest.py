@@ -85,12 +85,9 @@ def run_streaming_pipeline(
         if "stream_batch_id" in s:
             applied.add(s["stream_batch_id"])
 
-    # the polygon side is FIXED for the stream's life: decide broadcast
-    # and rectangle-exactness ONCE here, not with probe jobs every batch
-    broadcast_polys = planner.should_broadcast(pip_join.polygon_cells(
-        polygons.select("poly_id", "xs", "ys", "minx", "miny", "maxx", "maxy"),
-        pip_join.DEFAULT_RES))
-    exact = not planner.all_rectangles(polygons)
+    # the polygon side is FIXED for the stream's life: its layer stats are
+    # computed ONCE here, so planning each batch's join runs no job
+    poly_stats = planner.layer_stats(polygons)
 
     def on_batch(batch: DataFrame, batch_id: int) -> None:
         bid = f"{checkpoint_dir}:{batch_id}"
@@ -99,7 +96,7 @@ def run_streaming_pipeline(
         meta = extract_meta.valid_meta(extract_meta.extract_meta(batch, with_stats=False))
         joined = pip_join.pip_join(
             meta, polygons, point_cols=("image_id",), poly_cols=("poly_id",),
-            broadcast_polys=broadcast_polys, exact=exact,
+            poly_stats=poly_stats,
         )
         flat = joined.select(
             "image_id", "poly_id",

@@ -64,9 +64,12 @@ def test_resolution_invariance(points, polygons, expected_pairs):
 
 
 def test_planner_broadcast_decision(points, polygons):
-    pcs = pip_join.polygon_cells(polygons)
-    assert planner.should_broadcast(pcs) is True
-    assert planner.should_broadcast(pcs, limit=3) is False
+    # the planner decides on the exact exploded cover-row count
+    levels, n = planner.cover_plan(planner.layer_stats(polygons), pip_join.DEFAULT_RES)
+    assert levels == (pip_join.DEFAULT_RES,)
+    assert n == pip_join.polygon_cells(polygons).count()
+    assert planner.should_broadcast(n) is True
+    assert planner.should_broadcast(n, limit=3) is False
 
 
 def test_salt_factor(spark):

@@ -183,7 +183,7 @@ def test_size_hints_skip_probe_jobs(spark):
     sc = spark.sparkContext
     sc.setJobGroup("size-hint-test", "plan building must be job-free")
     try:
-        # exact=False also skips the all_rectangles probe
+        # exact=False also skips the planner aggregate
         PJ.pip_join(pts, polys, poly_cells_hint=100, exact=False)
         KNN.knn_join(boxes.selectExpr("query_id", "minx as lon", "miny as lat"),
                      pts, q_size_hint=1)

@@ -159,13 +159,15 @@ def test_polygons_gen_stats_match_probes(spark, polygons):
     from extractors_geo_spark.plans import planner
 
     st = polygons._egs_poly_stats
-    # the generation-time stats must reproduce the probe decisions exactly
-    assert st["all_rect"] == planner.all_rectangles(polygons)
+    # the generation-time stats reproduce the planner aggregate exactly
+    # (select() drops the stats riding the DataFrame, so this aggregates)
+    assert st == planner.layer_stats(polygons.select("*"))
     for res in (5, 6, 7):
-        want = pip_join.polygon_cells(
-            polygons.select("poly_id", "xs", "ys", "minx", "miny", "maxx", "maxy"), res).count()
-        got = sum(pip_join._cover_cells_n(a, b, c, d, res) for a, b, c, d in st["bboxes"])
-        assert got == want
+        levels, n = planner.cover_plan(st, res)
+        want = (polygons.select("minx", "miny", "maxx", "maxy",
+                                pip_join._cover_level(levels).alias("_lvl"))
+                .select(pip_join._cover_cells(levels)).count())
+        assert n == want
 
 
 def test_rect_layer_gen_stats_detects_rectangles(spark):
