@@ -59,7 +59,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_RG_CACHE: dict[str, int] = {}
+_RG_CACHE: dict[str, tuple[tuple, int]] = {}
 
 
 def _scan_parallelism(path: str) -> int:
@@ -67,27 +67,35 @@ def _scan_parallelism(path: str) -> int:
     total row-group count (a row group is read by the one split holding
     its midpoint; byte-splitting a 1-row-group file yields 1 non-empty
     task). Handles both a bare file and a directory of part files.
-    Driver-side footer reads, cached — no job, no data read."""
-    if path not in _RG_CACHE:
-        try:
-            import glob
-            import os
+    Driver-side footer reads, no job, no data read; cached per path
+    under the parquet files' names, sizes and mtimes, so a table
+    rewritten in-process is read again."""
+    import glob
+    import os
 
-            import pyarrow.parquet as pq
+    try:
+        files = ([path] if os.path.isfile(path)
+                 else sorted(glob.glob(f"{path}/*.parquet")))
+        sig = tuple((f, st.st_size, st.st_mtime_ns) for f, st in zip(files, map(os.stat, files)))
+    except OSError:
+        files, sig = [], ()
+    hit = _RG_CACHE.get(path)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    try:
+        import pyarrow.parquet as pq
 
-            files = ([path] if os.path.isfile(path)
-                     else glob.glob(f"{path}/*.parquet"))
-            if not files:
-                raise FileNotFoundError(path)
-            # cap footer reads: many part files are already parallel enough
-            if len(files) >= 64:
-                _RG_CACHE[path] = len(files)
-            else:
-                _RG_CACHE[path] = sum(
-                    pq.ParquetFile(f).metadata.num_row_groups for f in files)
-        except Exception:
-            _RG_CACHE[path] = 1 << 30  # unknown -> assume splittable
-    return _RG_CACHE[path]
+        if not files:
+            raise FileNotFoundError(path)
+        # cap footer reads: many part files are already parallel enough
+        if len(files) >= 64:
+            n = len(files)
+        else:
+            n = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
+    except (OSError, ValueError):  # missing or unreadable footer
+        n = 1 << 30  # unknown -> assume splittable
+    _RG_CACHE[path] = (sig, n)
+    return n
 
 
 def _pt(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -257,7 +265,7 @@ FROM p
 
 
 def q_cell_density(spark, sf_dir):
-    """A5: per-cell counts feeding the salting planner."""
+    """A5: per-cell point counts (cells.cell_density)."""
     p = _points(spark, sf_dir)
     tagged = p.withColumn("cell", cells.cell_id(F.col("lon"), F.col("lat"), RES))
     return cells.cell_density(tagged)
@@ -271,7 +279,7 @@ FROM p GROUP BY 1
 
 
 def q_cell_cover(spark, sf_dir):
-    """Covering cell set of a bbox (polygon_cells coarse phase)."""
+    """Covering cell set of a bbox (pip_join's coarse cover phase)."""
     p = _points(spark, sf_dir).filter(F.col("point_id") % 17 == 3)
     b = p.select("point_id", (F.col("lon") - 0.8).alias("minx"), (F.col("lat") - 0.8).alias("miny"),
                  (F.col("lon") + 0.8).alias("maxx"), (F.col("lat") + 0.8).alias("maxy"))
@@ -784,11 +792,12 @@ def q_asof_join(spark, sf_dir):
     most recent prior-or-equal view event (DuckDB native ASOF JOIN is the
     oracle).
 
-    r8: _ptk on user_id — both branch scans of the union read the SAME
-    keyed exchange (ReusedExchange: one scan of events instead of two),
-    and hash(user_id) already satisfies the dedup window's
-    (user_id, _ts) clustering, so no exchange is added for it
-    (measured 0.72 -> 0.49 s at sf1.0)."""
+    r8: _ptk on user_id, and hash(user_id) already satisfies the dedup
+    window's (user_id, _ts) clustering, so no exchange is added for it
+    (measured 0.72 -> 0.49 s at sf1.0). The two union branches do NOT
+    share that exchange: the filters push below it, so the captured
+    plan (plans/r08/asof_join_after.txt) has two parquet scans of
+    events and two Exchanges, no ReusedExchange."""
     from extractors_geo_spark.operators import asof
 
     ev = _ptk(spark, sf_dir, "events", "user_id")
@@ -2560,7 +2569,7 @@ SELECT 'ps' AS op, point_id, e_q, n_q FROM ({_ps_oracle_sql()})
 
 def q_cell_ops(spark, sf_dir):
     """Composite of the two cell-set primitives: bbox covering set
-    (polygon_cells coarse phase) + adaptive-split children at res+1."""
+    (pip_join's coarse cover phase) + children at res+1."""
     cover = q_cell_cover(spark, sf_dir).select(F.lit("cover").alias("op"), "point_id", "cell")
     kids = q_cell_children(spark, sf_dir).select(
         F.lit("children").alias("op"), "point_id", F.col("child").alias("cell"))

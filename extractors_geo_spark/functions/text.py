@@ -78,7 +78,8 @@ def n_tokens_ws(text: Column) -> Column:
 def n_tokens_bpe(text: Column) -> Column:
     """BPE-ish token count: alpha runs + digit runs + individual punct.
     regexp_count (r8): same matches as regexp_extract_all, but counts
-    without materializing the token array (guide §1.2 per-task work)."""
+    without materializing the token array (guide §1.2 per-task work).
+    NULL text gives a NULL count (NULL in, NULL out), not 0."""
     return F.regexp_count(text, F.lit(TOKEN_REGEX)).cast("int")
 
 

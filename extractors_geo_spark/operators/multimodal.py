@@ -390,9 +390,11 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000, fake: bool = True,
 
     REAL end-to-end for MJPEG-in-AVI: the container parse (..avi) yields
     per-frame JFIF bytes decoded by the in-repo JPEG codec — actual
-    pixels, actual fps-derived timestamps. MP4 inputs get REAL durations/
-    timestamps from the mvhd parse but fake pixels (no H.264 codec here);
-    other formats are fully fake (fake=True) or a clear stub error."""
+    pixels, actual fps-derived timestamps. MP4 tracks in JPEG, raw and
+    H.264 (..h264: CAVLC and CABAC, I and P/B slices) decode to real
+    pixels; other MP4 codecs get REAL durations/timestamps from the mvhd
+    parse but fake pixels; other formats are fully fake (fake=True) or a
+    clear stub error."""
 
     from .. import avi as _avi
     from .. import mp4 as _mp4
@@ -434,11 +436,11 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000, fake: bool = True,
                     except (ValueError, IndexError, struct.error, KeyError):
                         parsed = None
                     if parsed is not None and parsed.get("codec") == "h264":
-                        # REAL pixels for baseline intra streams: I_PCM
-                        # bit-exact, CAVLC I_4x4/I_16x16 entropy-decoded
-                        # (..h264, r5). CABAC / inter slices raise
-                        # ValueError -> the well-formed-unsupported
-                        # contract below (real duration either way)
+                        # REAL pixels: ..h264 decodes CAVLC and CABAC
+                        # streams, I and P/B slices. A stream it cannot
+                        # decode raises ValueError -> the
+                        # well-formed-unsupported contract below (real
+                        # duration either way)
                         try:
                             from .. import h264 as _h264
 
@@ -504,9 +506,10 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000, fake: bool = True,
                                          "frame": arr.tobytes()})
                         continue
                     try:
-                        # non-JPEG codec: REAL container parse still gives
-                        # real durations/timestamps; only frame PIXELS are
-                        # stubbed (no H.264/H.265 codec in this container)
+                        # a codec with no decoder here (or an H.264 stream
+                        # that failed to decode): the REAL container parse
+                        # still gives real durations/timestamps; only
+                        # frame PIXELS are stubbed
                         duration_ms = int(mp4_meta(data)["duration_s"] * 1000)
                         wellformed_mp4 = True
                     except Exception:  # malformed boxes: fall to fake/stub

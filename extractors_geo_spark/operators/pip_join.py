@@ -19,16 +19,23 @@ point side is tagged at, so each (point, polygon) pair meets in exactly
 one cell; any level set gives the same pairs, the set only sets the cost.
 A layer of 0.5-degree tracts joined at res 13 covers ~37k cells this way
 instead of ~2.2M. The level set is [res] — the classic single-level
-cover, points tagged once — when the caller forces the join strategy or
-passes `poly_cells_hint`.
+cover, points tagged once — when the caller forces the join strategy.
+
+Hot cells: the size-adaptive cover is the one hot-cell design. A metro
+cell packed with small polygons is split by the cover itself, because
+those polygons fit at a fine level and the hot points meet only the few
+polygons of their fine cell (BENCH/SKEW.md: 3,200 polygons in one res-6
+cell join faster by default at res 14 than salted or cell-split at res
+6). What remains is runtime skew on the partitioned path, which AQE's
+skew-join splits; `salt=` is the one explicit knob there.
 
 Physical strategy (plans.planner.should_broadcast on the cover-row count):
   * broadcast  — polygon cover small (the common dims-vs-facts shape; the
     states layer is 49 rows): the cover rows are broadcast, the point side
     never shuffles AT ALL.
-  * partitioned — both sides large: shuffle on `cell`; hot metro cells are
-    handled by AQE skew-join plus optional salting (points add a salt from
-    phash, polygon cells duplicate per salt).
+  * partitioned — both sides large: shuffle on `cell` with AQE skew-join,
+    plus optional salting (points add a salt hashed from `point_cols`,
+    polygon cells duplicate per salt).
 """
 
 from __future__ import annotations
@@ -86,16 +93,6 @@ def _point_cells(lon: str, lat: str, levels: tuple[int, ...]):
         return F.explode(F.array(*[cells.cell_id(F.col(lon), F.col(lat), lv) for lv in levels]))
 
     return _memo_col(("point_cells", lon, lat, levels), build)
-
-
-def polygon_cells(polygons: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    """Explode each polygon to its covering cells at `res` (bbox cover —
-    false positives removed by the exact refine)."""
-    return polygons.withColumn("cell", _cover_cells((res,)))
-
-
-def tag_point_cells(points: DataFrame, lon: str = "lon", lat: str = "lat", res: int = DEFAULT_RES) -> DataFrame:
-    return points.withColumn("cell", _point_cells(lon, lat, (res,)))
 
 
 def _raycast_refine(joined: DataFrame, lon: str, lat: str) -> DataFrame:
@@ -159,8 +156,6 @@ def pip_join(
     poly_cols: tuple[str, ...] = ("poly_id", "name"),
     exact: bool | str = "auto",
     salt: int | None = None,
-    poly_cells_hint: int | None = None,
-    cell_stats: dict | None = None,
     poly_stats: dict | None = None,
 ) -> DataFrame:
     """Return one row per (point, containing polygon).
@@ -179,25 +174,18 @@ def pip_join(
     a plan rewrite, not an approximation. Pass True/False to force.
     `salt` (partitioned path only) spreads each hot cell over `salt`
     shuffle keys; the polygon side is duplicated per salt value, the point
-    side picks pmod(phash-or-hash, salt). `poly_cells_hint` (expected
-    polygon-cell rows at `res`) decides broadcast without stats. Forcing
-    broadcast_polys or passing the hint covers every polygon at `res`;
-    with exact forced too, the plan builds with zero jobs.
-
-    `cell_stats` (plans.stats.stored_cell_stats) supplies the hottest-cell
-    bound that sets the salt factor on the partitioned path."""
+    side picks pmod(xxhash64(point_cols), salt). Forcing broadcast_polys
+    covers every polygon at `res`; with exact forced too, the plan builds
+    with zero jobs."""
     from ..plans import planner
 
-    single = broadcast_polys is not None or poly_cells_hint is not None
     stats = poly_stats
-    if stats is None and (not single or exact == "auto"):
+    if stats is None and (broadcast_polys is None or exact == "auto"):
         stats = planner.layer_stats(polygons)
     if exact == "auto":
         exact = not stats["all_rect"]
-    if single:
+    if broadcast_polys is not None:
         levels = (res,)
-        if broadcast_polys is None:
-            broadcast_polys = planner.should_broadcast(poly_cells_hint)
     else:
         levels, n_cells = planner.cover_plan(stats, res)
         broadcast_polys = planner.should_broadcast(n_cells)
@@ -214,12 +202,6 @@ def pip_join(
         # Catalyst keeps a non-trivial column used that often computed once
         pcs = pcs.select(*poly_cols, *geom_cols, _cover_level(levels).alias("_lvl"))
     pcs = pcs.select(*poly_cols, *geom_cols, _cover_cells(levels).alias("cell"))
-
-    if (salt is None and not broadcast_polys and cell_stats is not None
-            and cell_stats.get("max_cell_n")):
-        # stored hottest-cell bound -> salt factor with no probe job
-        s_ = planner.salt_factor(None, max_hint=cell_stats["max_cell_n"])
-        salt = s_ if s_ > 1 else None
 
     if broadcast_polys:
         joined = pts.join(F.broadcast(pcs), "cell")

@@ -6,9 +6,6 @@ rules, so physical decisions are encoded as plan-emitting functions:
                             which cell levels a pip_join at `res` uses and
                             how many cover rows that makes
   * should_broadcast      — broadcast-vs-partitioned spatial join
-  * salt_factor           — salt hot cells from observed density (A5)
-  * split_hot_cells       — adaptive cell-splitting: re-encode rows in hot
-                            cells at finer resolution before joining
 
 One density-driven table drives the polygon side. layer_stats returns,
 per fit level (cells.fit_level: the finest level at which a polygon's
@@ -21,14 +18,10 @@ comes from one aggregate over the unexploded polygon rows, or with zero
 jobs from generation-time stats (datagen.polygons_df, via
 stats_from_bboxes) or stored stats (plans.stats).
 
-Skew policy (measured, BENCH/SKEW.md): SALTING is the default hot-cell
-mitigation — on polygon-sparse layers it beats adaptive splitting at
-both measured scales (2.7x vs 1.3x at 2M, 3.7x vs 1.5x at 4M) and
-costs no geometry re-encode. split_hot_cells owns a MEASURED niche:
-hot cells densely packed with polygons (~1,000+ co-celled), where
-finer cells REDUCE each point's candidate set instead of merely
-spreading it — 6.2x vs salting's 3.3x at 3,200 polygons in one cell,
-margin growing with density (r6 niche bench).
+Hot cells need no planner rule of their own: a cell packed with small
+polygons is split by the size-adaptive cover (those polygons fit at a
+fine level), and runtime skew on the partitioned path is AQE's
+skew-join (BENCH/SKEW.md, measured with AQE on as session.py ships it).
 """
 
 from __future__ import annotations
@@ -43,8 +36,8 @@ BROADCAST_ROW_LIMIT = 2_000_000  # exploded polygon-cell rows; ~100 B/row → we
 
 def should_broadcast(cover_rows: int, limit: int = BROADCAST_ROW_LIMIT) -> bool:
     """Is a polygon side of `cover_rows` exploded cover rows small enough
-    to broadcast? Pure arithmetic: the count comes from cover_plan or a
-    caller's hint (VERDICT r02 #10)."""
+    to broadcast? Pure arithmetic on cover_plan's count (VERDICT r02
+    #10)."""
     return cover_rows <= limit
 
 
@@ -125,47 +118,3 @@ def cover_plan(stats: dict, res: int) -> tuple[tuple[int, ...], int]:
     if not levels or any(b[0] for b in by[res:]):
         levels.append(res)
     return tuple(levels), sum(b[1] for b in by[:res + 1]) + by[res][2]
-
-
-def salt_factor(density: DataFrame | None,
-                target_rows_per_task: int = 2_000_000,
-                max_hint: int | None = None) -> int:
-    """Pick a salt factor that caps the hottest cell at ~target rows per
-    task. `max_hint` (the hottest-cell count, e.g. from
-    plans.stats.stored_cell_stats) makes the decision pure arithmetic —
-    ZERO Spark jobs; otherwise one aggregation over the per-cell density
-    table (cells.cell_density output) probes it (r7, VERDICT r06 #5)."""
-    if max_hint is None:
-        row = density.agg(F.max("n").alias("mx")).collect()[0]
-        max_hint = row["mx"] or 0
-    return max(1, int((max_hint + target_rows_per_task - 1)
-                      // target_rows_per_task))
-
-
-def split_hot_cells(
-    tagged: DataFrame,
-    density: DataFrame,
-    hot_threshold: int,
-    lon: str = "lon",
-    lat: str = "lat",
-    levels: int = 1,
-) -> DataFrame:
-    """Adaptive cell-splitting (SURVEY.md §4.2 item 2): rows whose cell
-    count exceeds `hot_threshold` are re-encoded `levels` resolutions
-    finer (4^levels children — pick levels ~ log4(hot_count/target)).
-    `density` must be keyed by `cell`. Returns the input with `cell`
-    replaced for hot rows. Join with a polygon side that exploded its
-    cover at BOTH resolutions (cells.cover_bbox at res and res+levels)."""
-    hot = density.filter(F.col("n") > hot_threshold).select("cell", F.lit(True).alias("is_hot"))
-    out = tagged.join(F.broadcast(hot), "cell", "left")
-    res_plus = (F.col("cell") / F.lit(_cells.RES_SHIFT)).cast("int") + levels
-    # cell_id needs a literal res; recompute from decoded res via expression:
-    # new_cell = (res+levels)*SHIFT + iy2*YS + ix2 where ix2/iy2 derive from
-    # lon/lat. Inlined to stay one Catalyst expression.
-    n2 = F.pow(F.lit(2.0), res_plus).cast("long")  # exact for res <= 29
-    ix2 = F.least(F.greatest(F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * n2), F.lit(0)), n2 - 1).cast("long")
-    iy2 = F.least(F.greatest(F.floor((F.lit(90.0) - F.col(lat)) / F.lit(180.0) * n2), F.lit(0)), n2 - 1).cast("long")
-    finer = res_plus.cast("long") * F.lit(_cells.RES_SHIFT) + iy2 * F.lit(_cells.Y_SHIFT) + ix2
-    return out.withColumn(
-        "cell", F.when(F.col("is_hot"), finer).otherwise(F.col("cell"))
-    ).drop("is_hot")

@@ -1,22 +1,19 @@
-"""Ingest-time table statistics for the spatial planner (r7, VERDICT
-r06 #5).
+"""Ingest-time polygon-layer statistics for the spatial planner (r7,
+VERDICT r06 #5).
 
-The planner's physical decisions (broadcast-vs-partitioned join, salt
-factor, exact-vs-bbox refine) previously ran a probe JOB per decision
-when the caller had no hint. These helpers compute the needed numbers
-ONCE at ingest — riding the same aggregation pass the data makes anyway
-— store them in the SnapshotTable commit summary, and read them back as
-a driver-side metadata lookup (zero Spark jobs). pip_join consumes them
-via `cell_stats=` / `poly_stats=`; without polygon stats it runs one
-planner aggregate instead. The polygon stats are planner.layer_stats'
-per-fit-level table, which serves a join at any resolution.
+pip_join's planning decisions (cover level set, broadcast-vs-partitioned
+join, exact-vs-bbox refine) all read planner.layer_stats' per-fit-level
+table. Without stats that table costs one aggregate over the polygon
+rows per plan build. These helpers compute it ONCE at ingest, store it
+in the SnapshotTable commit summary, and read it back as a driver-side
+metadata lookup (zero Spark jobs); pip_join consumes it via
+`poly_stats=`. The table does not depend on `res`, so one copy serves a
+join at any resolution.
 
 Staleness across commits is handled CONSERVATIVELY: the reader combines
-every commit since the last full rewrite — per-cell maxima ADD (a cell
-can accumulate rows across appends), rectangle-ness ANDs, per-level
-polygon and cover counts add. Over-estimating the hot-cell count only
-over-salts (more, smaller tasks); it can never under-partition, so the
-bound is safe at any scale.
+every commit since the last full rewrite — per-level polygon and cover
+counts add, rectangle-ness ANDs. Deletes only remove polygons, so the
+combined counts stay upper bounds and the plan stays correct.
 
 Reference analog: none (the reference delegates planning to
 GeoServer/PostGIS); Spark-first surface per SURVEY §4.2.
@@ -25,50 +22,17 @@ GeoServer/PostGIS); Spark-first surface per SURVEY §4.2.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-CELL_STATS_KEY = "cell_stats"
 POLY_STATS_KEY = "poly_stats"
 
 
-def compute_cell_stats(points: DataFrame, lon: str = "lon",
-                       lat: str = "lat", res: int = 7) -> dict:
-    """One aggregation over the batch -> the point-side planner stats:
-    {'res', 'max_cell_n' (hottest cell), 'n_cells', 'rows'}."""
-    from ..operators import cells
-    from ..operators.pip_join import tag_point_cells
-
-    tagged = tag_point_cells(points.select(lon, lat), lon, lat, res)
-    d = cells.cell_density(tagged)
-    row = d.agg(F.max("n").alias("mx"), F.count(F.lit(1)).alias("nc"),
-                F.sum("n").alias("tot")).collect()[0]
-    return {"res": res, "max_cell_n": int(row["mx"] or 0),
-            "n_cells": int(row["nc"] or 0), "rows": int(row["tot"] or 0)}
-
-
-def compute_poly_stats(polygons: DataFrame, res: int = 7) -> dict:
-    """Polygon-side planner stats: the res-independent planner.layer_stats
-    table ('by_level', 'rows', 'all_rect'), plus the keys of the older
-    single-res format: 'res' and 'poly_cells' (cover rows of a pip_join
-    at `res`)."""
+def ingest_with_stats(table, df: DataFrame, mode: str = "append") -> int:
+    """Write the polygon layer `df` into `table` with its planner stats
+    (planner.layer_stats: 'by_level', 'rows', 'all_rect') attached to the
+    commit summary. mode: 'append' or 'overwrite'."""
     from . import planner
 
-    st = planner.layer_stats(polygons)
-    return {**st, "res": res, "poly_cells": planner.cover_plan(st, res)[1]}
-
-
-def ingest_with_stats(table, df: DataFrame, kind: str = "points",
-                      lon: str = "lon", lat: str = "lat", res: int = 7,
-                      mode: str = "append") -> int:
-    """Write `df` into `table` with planner stats attached to the commit
-    summary. kind='points' stores cell_stats; kind='polygons' stores
-    poly_stats. mode: 'append' or 'overwrite'."""
-    if kind == "points":
-        extra = {CELL_STATS_KEY: compute_cell_stats(df, lon, lat, res)}
-    elif kind == "polygons":
-        extra = {POLY_STATS_KEY: compute_poly_stats(df, res)}
-    else:
-        raise ValueError(f"unknown stats kind {kind!r}")
+    extra = {POLY_STATS_KEY: planner.layer_stats(df)}
     if mode == "append":
         return table.append(df, summary_extra=extra)
     if mode != "overwrite":
@@ -86,43 +50,18 @@ def ingest_with_stats(table, df: DataFrame, kind: str = "points",
     return v
 
 
-def stored_cell_stats(table) -> dict | None:
-    """Combined point-side stats for the CURRENT table state — a pure
-    metadata walk (no Spark jobs). Returns None when no commit since the
-    last full rewrite carries stats (callers fall back to the probe)."""
-    merged = None
-    for snap in _commits_since_rewrite(table):
-        st = snap.get("summary", {}).get(CELL_STATS_KEY)
-        if st is None:
-            if snap["operation"] in ("append", "merge", "overwrite",
-                                     "rollback"):
-                return None  # stat-less batch / rewound history
-            continue
-        if merged is None:
-            merged = dict(st)
-        else:
-            if st["res"] != merged["res"]:
-                return None
-            merged["max_cell_n"] += st["max_cell_n"]  # cells can stack
-            merged["n_cells"] = max(merged["n_cells"], st["n_cells"])
-            merged["rows"] += st["rows"]
-    return merged
-
-
 def stored_poly_stats(table) -> dict | None:
     """Combined polygon-side stats for the CURRENT table state: per-level
     counts add across appends, rectangle-ness ANDs. None when a commit
     since the last full rewrite has no stats or only the older single-res
     format (pip_join then runs its one planner aggregate)."""
-    from . import planner
-
     merged = None
     for snap in _commits_since_rewrite(table):
         st = snap.get("summary", {}).get(POLY_STATS_KEY)
         if st is None:
             if snap["operation"] in ("append", "merge", "overwrite",
                                      "rollback"):
-                return None
+                return None  # stat-less batch / rewound history
             continue
         if "by_level" not in st:
             return None
@@ -133,8 +72,6 @@ def stored_poly_stats(table) -> dict | None:
                                   for old, new in zip(merged["by_level"], st["by_level"])]
             merged["rows"] += st["rows"]
             merged["all_rect"] = merged["all_rect"] and st["all_rect"]
-    if merged is not None:
-        merged["poly_cells"] = planner.cover_plan(merged, merged["res"])[1]
     return merged
 
 
@@ -144,7 +81,7 @@ def _commits_since_rewrite(table):
     first. Deletes / compact / apply_deletes only reduce or repack rows,
     so earlier appends' stats stay valid UPPER bounds across them; a
     rollback makes linear version history misleading, so the walk
-    surfaces it and the readers bail to the probe."""
+    surfaces it and the reader bails to the aggregate."""
     cur = table.current_version()
     chain = []
     v = cur

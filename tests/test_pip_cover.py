@@ -51,6 +51,22 @@ def _mixed_layer(seed=4):
     return pd.DataFrame(rows)
 
 
+def _niche_layer(seed=6):
+    """The hot-cell niche: 400 squares of 0.02 degrees packed into a
+    0.5-degree metro square inside ONE res-6 cell, next to large quads."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for x0, y0 in zip(rng.uniform(-87.9, -87.42, 400), rng.uniform(41.6, 42.08, 400)):
+        xs, ys = _ring(x0, y0, x0 + 0.02, y0 + 0.02)
+        rows.append((xs, ys))
+    for x0, y0, size in ((-95.0, 35.0, 10.0), (-89.0, 40.0, 4.0), (-120.0, 20.0, 30.0),
+                         (10.0, -40.0, 60.0), (100.0, 10.0, 2.5)):
+        rows.append(_ring(x0, y0, x0 + size, y0 + size * 0.8, skew=0.3))
+    return pd.DataFrame([{"poly_id": i, "xs": [float(v) for v in xs], "ys": [float(v) for v in ys],
+                          "minx": min(xs), "miny": min(ys), "maxx": max(xs), "maxy": max(ys),
+                          "ring_lens": None} for i, (xs, ys) in enumerate(rows)])
+
+
 def _mixed_points(layer, seed=5, n=1500):
     rng = np.random.default_rng(seed)
     lon = [rng.uniform(-180, 180, n // 3)]
@@ -91,28 +107,47 @@ POLY_DDL = ("poly_id long, xs array<double>, ys array<double>, minx double, miny
             "maxx double, maxy double, ring_lens array<int>")
 
 
-@pytest.fixture(scope="module")
-def mixed(spark):
-    layer = _mixed_layer()
+def _layer_case(spark, layer):
     pts = _mixed_points(layer)
     polys = spark.createDataFrame(layer, POLY_DDL).cache()
     points = spark.createDataFrame(pts).cache()
     return layer, pts, polys, points, _oracle(pts, layer)
 
 
+@pytest.fixture(scope="module")
+def mixed(spark):
+    return _layer_case(spark, _mixed_layer())
+
+
+@pytest.fixture(scope="module")
+def niche(spark):
+    return _layer_case(spark, _niche_layer())
+
+
 def _pairs(df):
     return {(r["image_id"], r["poly_id"]) for r in df.collect()}
 
 
-@pytest.mark.parametrize("res", [0, 6, 13, 20])
-def test_multilevel_cover_matches_brute_force(mixed, res):
-    layer, _, polys, points, want = mixed
+@pytest.mark.parametrize("case,res", [
+    pytest.param("mixed", 0, id="0"), pytest.param("mixed", 6, id="6"),
+    pytest.param("mixed", 13, id="13"), pytest.param("mixed", 20, id="20"),
+    pytest.param("niche", 6, id="niche-6"), pytest.param("niche", 14, id="niche-14")])
+def test_multilevel_cover_matches_brute_force(request, case, res):
+    layer, _, polys, points, want = request.getfixturevalue(case)
     assert want  # the layer is not vacuous
     got = _pairs(pip_join.pip_join(points, polys, res=res, poly_cols=("poly_id",)))
     assert got == want
     levels, _ = planner.cover_plan(planner.layer_stats(polys), res)
-    if res >= 13:
+    if case == "mixed" and res >= 13:
         assert len(levels) > 2  # the mixed sizes really spread over levels
+    if case == "niche":
+        small = layer.iloc[:400]
+        col6 = np.floor((small[["minx", "maxx"]].to_numpy() + 180.0) / 360.0 * 64)
+        row6 = np.floor((90.0 - small[["miny", "maxy"]].to_numpy()) / 180.0 * 64)
+        assert np.unique(col6).size == 1 and np.unique(row6).size == 1  # one hot res-6 cell
+        if res == 14:
+            # the small squares cover at res 14, the large quads coarser
+            assert levels[-1] == 14 and levels[0] <= 6
 
 
 def test_salted_partitioned_path_matches_brute_force(mixed):
@@ -159,7 +194,7 @@ def test_plan_build_job_budget(spark, mixed, tmp_path):
     _, pts, polys, points, _ = mixed
     gen = datagen.polygons_df(spark)
     t = SnapshotTable(spark, str(tmp_path / "layer"))
-    stats.ingest_with_stats(t, polys, kind="polygons", res=7)
+    stats.ingest_with_stats(t, polys)
     stored = stats.stored_poly_stats(t)
     for build in (
         lambda: pip_join.pip_join(points, gen, res=13),
@@ -185,7 +220,7 @@ def _no_ids(df):
 def test_stored_stats_plan_any_res_like_the_aggregate(spark, mixed, tmp_path):
     _, _, polys, points, _ = mixed
     t = SnapshotTable(spark, str(tmp_path / "layer7"))
-    stats.ingest_with_stats(t, polys, kind="polygons", res=7)
+    stats.ingest_with_stats(t, polys)
     stored = stats.stored_poly_stats(t)
     agg = planner.layer_stats(polys)
     for res in (3, 13):

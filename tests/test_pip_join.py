@@ -1,5 +1,5 @@
 """PIP join vs brute-force double loop (SURVEY.md §5 item 4) across all
-physical variants: broadcast, partitioned, salted, adaptive-split."""
+physical variants: broadcast, partitioned, salted."""
 
 import numpy as np
 import pytest
@@ -67,32 +67,7 @@ def test_planner_broadcast_decision(points, polygons):
     # the planner decides on the exact exploded cover-row count
     levels, n = planner.cover_plan(planner.layer_stats(polygons), pip_join.DEFAULT_RES)
     assert levels == (pip_join.DEFAULT_RES,)
-    assert n == pip_join.polygon_cells(polygons).count()
+    box = [F.col(c) for c in ("minx", "miny", "maxx", "maxy")]
+    assert n == polygons.select(F.explode(cells.cover_bbox(*box, pip_join.DEFAULT_RES))).count()
     assert planner.should_broadcast(n) is True
     assert planner.should_broadcast(n, limit=3) is False
-
-
-def test_salt_factor(spark):
-    density = spark.createDataFrame([(1, 10_000_000), (2, 100)], ["cell", "n"])
-    assert planner.salt_factor(density, target_rows_per_task=2_000_000) == 5
-    assert planner.salt_factor(density.filter(F.col("n") < 1000)) == 1
-
-
-def test_split_hot_cells_preserves_pip(spark, points, polygons, expected_pairs):
-    """Adaptive cell-splitting: hot cells re-encode finer; joining against
-    a polygon side exploded at BOTH resolutions keeps results identical."""
-    res = 6
-    tagged = pip_join.tag_point_cells(points, res=res)
-    density = cells.cell_density(tagged)
-    split = planner.split_hot_cells(tagged, density, hot_threshold=5)
-    pcs = pip_join.polygon_cells(polygons, res=res).unionByName(
-        pip_join.polygon_cells(polygons, res=res + 1)
-    )
-    joined = split.join(F.broadcast(pcs), "cell").filter(
-        (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
-        & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy"))
-    )
-    refined = pip_join._raycast_refine(joined, "lon", "lat")
-    got = {(r["image_id"], r["poly_id"]) for r in
-           refined.select("image_id", "poly_id").dropDuplicates().collect()}
-    assert got == expected_pairs

@@ -1,10 +1,6 @@
-"""Ingest-time planner stats (r7, VERDICT r06 #5): stored per-cell /
-polygon stats make every pip_join planning decision a driver-side
-metadata lookup — zero probe jobs on tables with stats."""
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
+"""Ingest-time planner stats (r7, VERDICT r06 #5): stored polygon-layer
+stats make every pip_join planning decision a driver-side metadata
+lookup — zero probe jobs on tables with stats."""
 
 from extractors_geo_spark.operators import pip_join as P
 from extractors_geo_spark.plans import planner, stats
@@ -29,35 +25,29 @@ def _polys(spark):
 
 
 def test_stats_roundtrip_through_snapshot_table(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "pts"))
-    stats.ingest_with_stats(t, _points(spark), kind="points", res=7)
-    st = stats.stored_cell_stats(t)
-    assert st is not None and st["rows"] == 400 and st["max_cell_n"] >= 1
-    # appends combine conservatively (maxima add)
-    stats.ingest_with_stats(t, _points(spark, 100), kind="points", res=7)
-    st2 = stats.stored_cell_stats(t)
-    assert st2["rows"] == 500 and st2["max_cell_n"] >= st["max_cell_n"]
-    # a stat-less append invalidates (bound unknown -> probe fallback)
-    t.append(_points(spark, 10))
-    assert stats.stored_cell_stats(t) is None
+    t = SnapshotTable(spark, str(tmp_path / "polys"))
+    stats.ingest_with_stats(t, _polys(spark))
+    st = stats.stored_poly_stats(t)
+    assert st is not None and st["rows"] == 5 and st["all_rect"] is True
+    # appends combine conservatively (per-level counts add)
+    stats.ingest_with_stats(t, _polys(spark))
+    st2 = stats.stored_poly_stats(t)
+    assert st2["rows"] == 10
+    assert planner.cover_plan(st2, 7)[1] == 2 * planner.cover_plan(st, 7)[1]
+    # a stat-less append invalidates (counts unknown -> aggregate fallback)
+    t.append(_polys(spark))
+    assert stats.stored_poly_stats(t) is None
     # overwrite with stats resets the chain
-    stats.ingest_with_stats(t, _points(spark, 50), kind="points",
-                            mode="overwrite")
-    assert stats.stored_cell_stats(t)["rows"] == 50
+    stats.ingest_with_stats(t, _polys(spark), mode="overwrite")
+    assert stats.stored_poly_stats(t)["rows"] == 5
 
 
 def test_poly_stats_roundtrip(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "polys"))
-    stats.ingest_with_stats(t, _polys(spark), kind="polygons", res=7)
+    stats.ingest_with_stats(t, _polys(spark))
     st = stats.stored_poly_stats(t)
-    assert st is not None and st["poly_cells"] > 0 and st["all_rect"] is True
-
-
-def test_salt_factor_hint_runs_no_job():
-    # pure arithmetic: no density DataFrame at all
-    assert planner.salt_factor(None, max_hint=0) == 1
-    assert planner.salt_factor(None, max_hint=1_999_999) == 1
-    assert planner.salt_factor(None, max_hint=6_000_001) == 4
+    assert st is not None and planner.cover_plan(st, 7)[1] > 0 and st["all_rect"] is True
+    assert set(st) == {"by_level", "rows", "all_rect"}
 
 
 def test_pip_join_with_stats_builds_plan_with_zero_probe_jobs(spark, tmp_path):
@@ -66,17 +56,16 @@ def test_pip_join_with_stats_builds_plan_with_zero_probe_jobs(spark, tmp_path):
     metadata lookup. Jobs are counted by job group: a spy on
     DataFrame.count/collect misses the classic DataFrame subclass."""
     pts_t = SnapshotTable(spark, str(tmp_path / "p2"))
-    stats.ingest_with_stats(pts_t, _points(spark), kind="points", res=7)
+    pts_t.append(_points(spark))
     poly_t = SnapshotTable(spark, str(tmp_path / "g2"))
-    stats.ingest_with_stats(poly_t, _polys(spark), kind="polygons", res=7)
-    cst = stats.stored_cell_stats(pts_t)
+    stats.ingest_with_stats(poly_t, _polys(spark))
     pst = stats.stored_poly_stats(poly_t)
     pts, polys = pts_t.read(), poly_t.read()
 
     sc = spark.sparkContext
     sc.setJobGroup("stats-plan", "plan building must be job-free")
     try:
-        out = P.pip_join(pts, polys, cell_stats=cst, poly_stats=pst)
+        out = P.pip_join(pts, polys, poly_stats=pst)
     finally:
         sc.setJobGroup(None, None)
     jobs = sc.statusTracker().getJobIdsForGroup("stats-plan")
@@ -88,14 +77,3 @@ def test_pip_join_with_stats_builds_plan_with_zero_probe_jobs(spark, tmp_path):
     got = {(r["image_id"], r["poly_id"]) for r in out.collect()}
     want = {(r["image_id"], r["poly_id"]) for r in base.collect()}
     assert got == want
-
-
-def test_pip_join_stats_salt_applies_on_partitioned_path(spark):
-    """A huge stored hot-cell bound forces salting on the partitioned
-    path — visible in the plan as the salt join keys."""
-    pts, polys = _points(spark), _polys(spark)
-    out = P.pip_join(pts, polys, broadcast_polys=False,
-                     cell_stats={"res": 7, "max_cell_n": 8_000_000,
-                                 "n_cells": 1, "rows": 8_000_000})
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "salt" in plan

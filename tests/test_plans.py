@@ -183,8 +183,8 @@ def test_size_hints_skip_probe_jobs(spark):
     sc = spark.sparkContext
     sc.setJobGroup("size-hint-test", "plan building must be job-free")
     try:
-        # exact=False also skips the planner aggregate
-        PJ.pip_join(pts, polys, poly_cells_hint=100, exact=False)
+        # forcing the strategy and exact=False skips the planner aggregate
+        PJ.pip_join(pts, polys, broadcast_polys=True, exact=False)
         KNN.knn_join(boxes.selectExpr("query_id", "minx as lon", "miny as lat"),
                      pts, q_size_hint=1)
         BJ.bbox_join(pts.selectExpr("image_id", "lon as minx", "lat as miny",

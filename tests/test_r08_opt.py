@@ -39,14 +39,17 @@ def test_punct_ratio_translate_equals_regex(spark):
 
 def test_bpe_regexp_count_equals_extract_all(spark):
     df = spark.createDataFrame(
-        [("",), ("one two3 four!",), ("a1b2c3",), ("...",), ("hello, world! 42",)],
+        [("",), ("one two3 four!",), ("a1b2c3",), ("...",), ("hello, world! 42",), (None,)],
         "text string")
     got = df.select(
+        "text",
         X.n_tokens_bpe(F.col("text")).alias("new"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit(X.TOKEN_REGEX), 0)).alias("old"),
     ).collect()
     for r in got:
         assert r["new"] == r["old"]
+    # NULL text in, NULL count out (not 0)
+    assert [r["new"] for r in got if r["text"] is None] == [None]
 
 
 # ------------------------------------------------------- ngram length filter
@@ -195,3 +198,68 @@ def test_exprcache_reuse_is_plan_identical(spark):
     a = df.select(fresh.alias("c")).collect()
     b = df.select(memo1.alias("c")).collect()
     assert a == b
+
+
+def test_exprcache_drops_trees_of_a_replaced_gateway():
+    """The memo holds a weakref to the gateway: once that gateway is gone,
+    a new one gets freshly built Columns, even when it reuses the dead
+    gateway's id()."""
+    import gc
+
+    from pyspark import SparkContext
+
+    from extractors_geo_spark.exprcache import memo_col
+
+    class Gateway:
+        pass
+
+    class Context:
+        def __init__(self, gw):
+            self._gateway = gw
+
+    active = SparkContext._active_spark_context
+    try:
+        gw = Gateway()
+        old_id = id(gw)
+        SparkContext._active_spark_context = Context(gw)
+        first = memo_col(("t_gw",), object)
+        assert memo_col(("t_gw",), object) is first
+        SparkContext._active_spark_context = None
+        del gw
+        gc.collect()
+        keep = []  # allocate until a new gateway lands on the old id (CPython reuses it)
+        new = Gateway()
+        while id(new) != old_id and len(keep) < 200_000:
+            keep.append(new)
+            new = Gateway()
+        SparkContext._active_spark_context = Context(new)
+        second = memo_col(("t_gw",), object)
+        assert second is not first
+        assert memo_col(("t_gw",), object) is second
+    finally:
+        SparkContext._active_spark_context = active
+
+
+def test_scan_parallelism_sees_an_in_process_rewrite(tmp_path):
+    """_scan_parallelism's cache follows the parquet files: a table
+    rewritten in-process with another row-group count is read again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    tbl = pa.table({"x": list(range(1000))})
+    table_dir = tmp_path / "t.parquet"
+    table_dir.mkdir()
+    part = table_dir / "part-0.parquet"
+    bare = tmp_path / "bare.parquet"
+    for path in (part, bare):
+        pq.write_table(tbl, path, row_group_size=250)
+    assert E._scan_parallelism(str(table_dir)) == 4
+    assert E._scan_parallelism(str(bare)) == 4
+    for path in (part, bare):  # rewritten under the same name
+        pq.write_table(tbl, path, row_group_size=500)
+    assert E._scan_parallelism(str(table_dir)) == 2
+    assert E._scan_parallelism(str(bare)) == 2
+    (table_dir / "part-1.parquet").write_bytes(bare.read_bytes())
+    assert E._scan_parallelism(str(table_dir)) == 4

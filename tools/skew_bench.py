@@ -1,18 +1,20 @@
-"""Skew-handling evidence: salted + adaptive-split PIP join on a
-pathologically hot cell vs the naive partitioned join.
+"""Skew-handling evidence: the default planner and the salted PIP join
+on a pathologically hot cell vs the naive partitioned join.
 
 Workload: N points with `hot_frac` of them inside ONE res-6 cell (a
-"dense metro" x100), joined against a polygon layer without broadcasting
-(the partitioned path — the regime where skew actually matters; small
-layers would broadcast and dodge the problem). Three plans:
+"dense metro" x100), joined against a polygon layer. Three plans:
 
-  naive       shuffle on cell, one reducer owns the hot cell
-  salted      pip_join(salt=k): hot cell spread over k shuffle keys
-  split       adaptive cell-splitting: hot-cell rows re-encoded 3
-              resolutions finer (64 children) before the join
+  naive       pip_join(broadcast_polys=False): shuffle on the res-6
+              cell, AQE skew-join splits the hot reducer's partition
+  salted      the same plus salt=16: hot cell spread over 16 shuffle keys
+  planner     the default pip_join at res 14: the size-adaptive cover
+              picks each polygon's level and the broadcast decision
 
-All three must return identical results (asserted); wall times to
-BENCH/SKEW.md.
+The session is the engine's own (session.get_spark: AQE with skew-join
+on, `SPARK_GRAFT_CPUS` threads). All three must return identical results
+(asserted); wall times to BENCH/SKEW.md.
+
+    SPARK_GRAFT_CPUS=4 python tools/skew_bench.py [N ...] [--niche-only]
 """
 
 from __future__ import annotations
@@ -29,8 +31,7 @@ import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from extractors_geo_spark import datagen  # noqa: E402
-from extractors_geo_spark.operators import cells, pip_join  # noqa: E402
-from extractors_geo_spark.plans import planner  # noqa: E402
+from extractors_geo_spark.operators import pip_join  # noqa: E402
 from extractors_geo_spark.session import get_spark  # noqa: E402
 
 
@@ -46,25 +47,18 @@ def make_points(spark, n: int, hot_frac: float = 0.5):
                        lon.alias("lon"), lat.alias("lat"))
 
 
-def run(spark, pts, polys, mode: str, res: int = 6,
-        levels: int = 3) -> tuple[float, int]:
+PLANNER_RES = 14
+MODES = ("naive", "salted", "planner")
+
+
+def run(spark, pts, polys, mode: str, res: int = 6) -> tuple[float, int]:
     t0 = time.time()
     if mode == "naive":
         out = pip_join.pip_join(pts, polys, broadcast_polys=False, res=res)
     elif mode == "salted":
         out = pip_join.pip_join(pts, polys, broadcast_polys=False, res=res, salt=16)
-    elif mode == "split":
-        tagged = pip_join.tag_point_cells(pts, res=res)
-        density = cells.cell_density(tagged)
-        split = planner.split_hot_cells(tagged, density, hot_threshold=pts.count() // 20, levels=levels)
-        pcs = pip_join.polygon_cells(
-            polys.select("poly_id", "name", "xs", "ys", "minx", "miny", "maxx", "maxy"), res
-        ).unionByName(pip_join.polygon_cells(
-            polys.select("poly_id", "name", "xs", "ys", "minx", "miny", "maxx", "maxy"), res + levels))
-        joined = split.join(pcs.hint("shuffle_hash"), "cell").filter(
-            (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
-            & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy")))
-        out = pip_join._raycast_refine(joined, "lon", "lat").select("image_id", "poly_id").dropDuplicates()
+    elif mode == "planner":
+        out = pip_join.pip_join(pts, polys, res=PLANNER_RES)
     n = out.count()
     return time.time() - t0, n
 
@@ -94,39 +88,15 @@ def make_dense_polys(spark, n_hot: int = 3200, n_cold: int = 50):
     return spark.createDataFrame(rows, datagen.POLY_SCHEMA)
 
 
-def bench_niche(spark, n: int, levels: int = 8) -> tuple[dict, dict]:
-    """The split niche (VERDICT r5 #10): one res-6 cell holds ~3,200 SMALL
-    polygons. Salting spreads the hot cell's candidate pairs over more
-    reducers but every point still pairs with every co-celled polygon;
-    splitting `levels` resolutions finer shrinks each point's candidate
-    set to the few polygons covering its fine cell — work REDUCTION, not
-    just work spreading."""
+def bench(spark, n: int, polys) -> tuple[dict, dict]:
+    """Min-of-2 wall seconds and row counts of every mode over `n` points."""
     pts = make_points(spark, n).cache()
     pts.count()
-    polys = make_dense_polys(spark).cache()
+    polys = polys.cache()
     polys.count()
     run(spark, pts.limit(2000), polys, "naive")  # warm python pool
     results, counts = {}, {}
-    for mode in ("naive", "salted", "split"):
-        best = 1e18
-        for _ in range(2):
-            sec, cnt = run(spark, pts, polys, mode, levels=levels)
-            best = min(best, sec)
-        results[mode], counts[mode] = best, cnt
-    assert len(set(counts.values())) == 1, f"result mismatch: {counts}"
-    pts.unpersist()
-    polys.unpersist()
-    return results, counts
-
-
-def bench_scale(spark, n: int) -> tuple[dict, dict]:
-    pts = make_points(spark, n).cache()
-    pts.count()
-    polys = datagen.polygons_df(spark).cache()
-    polys.count()
-    run(spark, pts.limit(2000), polys, "naive")  # warm python pool
-    results, counts = {}, {}
-    for mode in ("naive", "salted", "split"):
+    for mode in MODES:
         best = 1e18
         for _ in range(2):
             sec, cnt = run(spark, pts, polys, mode)
@@ -138,101 +108,57 @@ def bench_scale(spark, n: int) -> tuple[dict, dict]:
     return results, counts
 
 
-def _table(n: int, results: dict, counts: dict) -> str:
+def _table(results: dict, counts: dict) -> str:
+    naive = results["naive"]
     return f"""
-## {n:,} points
-
 All three plans return identical row counts ({counts['naive']:,}).
 
 | plan | wall s (min of 2) | speedup vs naive |
 |---|---|---|
-| naive partitioned join | {results['naive']:.2f} | 1.00x |
-| salted (salt=16)       | {results['salted']:.2f} | {results['naive']/results['salted']:.2f}x |
-| adaptive cell split    | {results['split']:.2f} | {results['naive']/results['split']:.2f}x |
+| naive partitioned join (res 6) | {naive:.2f} | 1.00x |
+| salted (salt=16, res 6)        | {results['salted']:.2f} | {naive / results['salted']:.2f}x |
+| planner (default, res {PLANNER_RES})     | {results['planner']:.2f} | {naive / results['planner']:.2f}x |
 """
 
 
 def main() -> None:
-    # both scales in ONE report so the scale trend is visible with
-    # distinct numbers (VERDICT r04 #7: the r4 file accidentally showed
-    # the 4M table twice and lost the 2M baseline)
     args = [a for a in sys.argv[1:] if a != "--niche-only"]
     niche_only = "--niche-only" in sys.argv[1:]
     scales = [int(a) for a in args] or [2_000_000, 4_000_000]
-    spark = get_spark(app_name="skew_bench", master="local[32]",
-                      extra_conf={
-                          # isolate OUR skew mitigations from AQE's
-                          "spark.sql.adaptive.skewJoin.enabled": "false",
-                          "spark.sql.adaptive.coalescePartitions.enabled": "false",
-                      })
-    niche = bench_niche(spark, 1_000_000)
+    spark = get_spark(app_name="skew_bench")
+    cpus = spark.sparkContext.defaultParallelism
+    niche = bench(spark, 1_000_000, make_dense_polys(spark))
     if niche_only:
         print(json.dumps({"niche": {"seconds": niche[0], "rows": niche[1]["naive"]}}))
         spark.stop()
         return
-    out = {}
-    for n in scales:
-        out[n] = bench_scale(spark, n)
+    out = {n: bench(spark, n, datagen.polygons_df(spark)) for n in scales}
+    layer = "".join(f"\n## 50-polygon layer: {n:,} points\n{_table(*out[n])}" for n in scales)
+    md = f"""# BENCH/SKEW — hot-cell evidence
 
-    lo = min(scales)
-    hi = max(scales)
-    sp = {n: out[n][0]["naive"] / out[n][0]["salted"] for n in scales}
-    nr, ncounts = niche
-    nc = ncounts["naive"]
-    nsp_salt = nr["naive"] / nr["salted"]
-    nsp_split = nr["naive"] / nr["split"]
-    md = f"""# BENCH/SKEW — hot-cell mitigation evidence
+Generated by `tools/skew_bench.py` on {cpus} local cores with the
+engine's session settings (AQE on, skew-join and partition coalescing
+enabled). 50% of the points sit inside ONE res-6 geocell (dense-metro
+x100). `naive` and `salted` force the partitioned join at res 6, where
+the hot cell is one shuffle key; `planner` is the default `pip_join` at
+res {PLANNER_RES}, where the size-adaptive cover picks each polygon's
+level and the broadcast decision.
 
-50% of the points sit inside ONE res-6 geocell (dense-metro x100);
-partitioned (non-broadcast) PIP join against the 50-polygon layer;
-AQE skew-join and partition coalescing DISABLED to isolate the engine's
-own mitigations.
-{"".join(_table(n, *out[n]) for n in scales)}
-The salted-join advantage grows with scale ({sp[lo]:.2f}x at {lo:,} ->
-{sp[hi]:.2f}x at {hi:,}): the naive plan's hot reducer owns a fixed
-fraction of a growing input while the salted plan keeps every reducer
-near the mean — exactly the trend that matters at 100x. Salting is the
-planner default for hot cells (planner.salt_factor from observed
-per-cell density); adaptive cell-splitting (planner.split_hot_cells,
-log4(hot/target) levels) is reserved for its measured niche below — on
-this 50-polygon layer it re-encodes geometry for no candidate reduction
-and measures slower than salting at both scales.
+## The hot cell dense with polygons: 1,000,000 points
 
-## The split niche (measured): hot cell DENSE WITH POLYGONS
-
-1,000,000 points (50% in the metro square) against 3,200 SMALL
-(~0.02 deg) polygons packed inside the SAME res-6 cell (+50 elsewhere).
-Salting
-spreads the hot cell's candidate pairs across reducers but every hot
-point still pairs with all ~3,200 co-celled polygons (work spreading);
-splitting 8 resolutions finer shrinks each point's candidate set to the
-few polygons covering its fine cell (work REDUCTION — the thing salting
-cannot do). All three plans return identical rows ({nc:,}):
-
-| plan | wall s (min of 2) | speedup vs naive |
-|---|---|---|
-| naive partitioned join | {nr['naive']:.2f} | 1.00x |
-| salted (salt=16)       | {nr['salted']:.2f} | {nsp_salt:.2f}x |
-| adaptive cell split (levels=8) | {nr['split']:.2f} | {nsp_split:.2f}x |
-
-Planner policy (unchanged, now with both sides measured): SALT by
-default — split ONLY when per-cell polygon density is high enough that
-finer cells cut the candidate set (split speedup / salt speedup here:
-{nsp_split / nsp_salt:.2f}x). The margin GROWS with co-celled polygon
-density — measured split/salt ratios 0.63x at 400 polygons, 1.24x at
-1,600, {nsp_split / nsp_salt:.2f}x at 3,200 — so the crossover sits
-where a hot cell holds on the order of a thousand polygons; below it
-salting's zero-re-encode simplicity wins.
-
-In production both mitigations compose with AQE skew-join (enabled by
-default in session.py).
-"""
+3,200 small (~0.02 deg) polygons packed inside the hot res-6 cell, plus
+50 elsewhere. At res 6 every hot point pairs with all ~3,200 co-celled
+polygons; salting and AQE's skew split only spread that work over more
+tasks. The planner covers each small polygon at its own fine level, so
+a hot point meets only the few polygons of its fine cell.
+{_table(*niche)}{layer}"""
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "SKEW.md"), "w") as f:
         f.write(md)
     print(md)
-    print(json.dumps({str(n): {"seconds": out[n][0], "rows": out[n][1]["naive"]}
-                      for n in scales}))
+    print(json.dumps({"niche": {"seconds": niche[0], "rows": niche[1]["naive"]},
+                      **{str(n): {"seconds": out[n][0], "rows": out[n][1]["naive"]}
+                         for n in scales}}))
     spark.stop()
 
 
